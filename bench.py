@@ -20,8 +20,7 @@ Workloads:
   ≥200k turns). The driver documents table has only ~31 distinct terms
   — every query term is hot with near-zero idf, so block-max pruning
   cannot help there by construction; the Zipf corpus is the workload
-  WAND exists for. wand_prune_stats evidence (segments/postings
-  skipped) is recorded alongside the latencies.
+  MaxScore pruning exists for.
 - a representative slice of the oracle-gated operator suite.
 """
 
@@ -168,8 +167,7 @@ def main() -> None:
     # INTERLEAVED so a host-interference window hits both paths alike.
     from search_engine_spark.operators.docids import mint_doc_ids
     from search_engine_spark.operators.index_build import postings_blocked as _pb
-    from search_engine_spark.operators.wand import (wand_prune_stats, wand_topk,
-                                                    wand_topk_maxscore)
+    from search_engine_spark.operators.wand import wand_topk_maxscore
     from search_engine_spark.sources.transcripts import generate_transcripts
     t0 = time.time()
     zt = generate_transcripts(spark, n_convs=ZIPF_CONVS, seed=7, partitions=cpus)
@@ -224,7 +222,7 @@ def main() -> None:
     # wand_p50_ms = the all-JVM MaxScore path (champion θ floor,
     # essential/non-essential term split, block-skipped candidate
     # probes, codegen scoring) — rank/score-identical to bm25
-    # (wand_topk_hybrid/wand_topk gates + property tests).
+    # (wand_topk_maxscore gate + property tests).
     bm25_topk_from_index(zidx, None, zq, zn, zavgdl, k=10).collect()  # warmup
     wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()          # warmup
     lat, lat_w = [], []
@@ -291,32 +289,6 @@ def main() -> None:
     extras["auto_trec_samples"] = [round(x, 2) for x in lat_da]
     extras["trec_k"] = TOP_K_TREC
 
-    # the mapInPandas scorer — the north-rule surface; Arrow-transfer
-    # bound, so it runs (with its pruning evidence) on a 30-query
-    # sub-batch to keep the artifact cheap
-    sub = query_terms_df(spark, zq_set[:30])
-    wand_topk(zidx, sub, zn, zavgdl, k=10).collect()  # warmup
-    lat_p = []
-    for _ in range(3):
-        t0 = time.time()
-        wand_topk(zidx, sub, zn, zavgdl, k=10).collect()
-        lat_p.append(time.time() - t0)
-    extras["wand_pandas_p50_ms_30q"] = round(statistics.median(lat_p) * 1000, 1)
-
-    # pruning evidence, coarse→fine: postings the JVM range-eliminator
-    # never transferred to Python, then segments/postings the θ-seeded
-    # scorer actually exact-scored among what WAS transferred
-    srows = wand_prune_stats(zidx, sub, zn, zavgdl, k=10).collect()
-    qp_total = (zidx.join(F.broadcast(sub.select("qid", "term")), "term")
-                .agg(F.sum(F.size("postings"))).collect()[0][0]) or 1
-    pos_transferred = sum(r.n_postings for r in srows)
-    seg_t = sum(r.n_segments for r in srows) or 1
-    extras["wand_qterm_postings_30q"] = int(qp_total)
-    extras["wand_postings_transferred_frac"] = round(pos_transferred / qp_total, 4)
-    extras["wand_segments_scored_frac"] = round(
-        sum(r.n_scored_segments for r in srows) / seg_t, 4)
-    extras["wand_postings_scored_frac"] = round(
-        sum(r.n_postings_scored for r in srows) / max(pos_transferred, 1), 4)
     zidx.unpersist()
     zds.unpersist()
 

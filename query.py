@@ -2,13 +2,13 @@
 """Query entrypoint (E2 of SURVEY.md §3; reference analogue
 `python3 invertedIndex.py <runId> -q ddd qqq k topics docs out`).
 
-    python3 query.py --index /tmp/idx --query "spark join" --k 10
-    python3 query.py --index /tmp/idx --topics topics.tsv --mode wand \
-        --trec-out results.txt
+    python3 query.py --index IDX --query "spark join" --k 10
+    python3 query.py --index IDX --topics topics.tsv --trec-out results.txt
 
 --topics is a TSV of `qid<TAB>title` lines (the reference's topic file
-equivalent). --mode taat = exhaustive scoring; wand = mapInPandas
-block-max scorer; maxscore = all-JVM MaxScore strategy (all three are
+equivalent). The default --mode bm25 serves through
+operators/wand.py::topk_auto, which picks MaxScore pruning for shallow
+k on a large corpus and exhaustive scoring otherwise (both are
 rank/score-identical, property-gated). Output: qid doc_id rank score (+
 TREC run file with --trec-out, format `qid 0 docid rank score runId`,
 reference src/invertedIndex.py:293-296).
@@ -31,13 +31,14 @@ def main() -> None:
     ap.add_argument("--topics", help="TSV file of qid<TAB>title")
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--mode",
-                    choices=("auto", "taat", "taat-bounded", "wand",
-                             "maxscore", "phrase",
+                    choices=("bm25", "taat-bounded", "phrase",
                              "near", "lm", "prefix", "suffix", "infix",
                              "fuzzy", "suggest", "mlt"),
-                    default="wand",
-                    help="auto = cost-based pick (MaxScore for shallow k, "
-                         "exhaustive for deep k); phrase/near need an index "
+                    default="bm25",
+                    help="bm25 = cost-based pick (MaxScore for shallow k "
+                         "on a large corpus, exhaustive otherwise); "
+                         "taat-bounded = accumulator-budgeted TAAT; "
+                         "phrase/near need an index "
                          "built with --positional; phrase treats each title "
                          "as an exact phrase, near as a NEAR/W term bag; "
                          "lm = query-likelihood (Dirichlet) ranking; prefix "
@@ -62,9 +63,9 @@ def main() -> None:
                          "zero-join) when the index was built with "
                          "--topical-shards")
     ap.add_argument("--route-serve", action="store_true",
-                    help="with --route M: serve the route-then-score "
-                         "ranking (only the top-M shards scored) instead "
-                         "of the monolithic one")
+                    help="with --route M and --mode bm25: serve the "
+                         "route-then-score ranking (only the top-M shards "
+                         "scored) instead of the monolithic one")
     ap.add_argument("--near-window", type=int, default=None,
                     help="NEAR window in tokens (default conf.NEAR_WINDOW)")
     ap.add_argument("--trec-out", help="write TREC run lines here")
@@ -90,10 +91,8 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
 
-    from search_engine_spark.operators.query import (bm25_topk_from_index,
-                                                     query_terms_df,
+    from search_engine_spark.operators.query import (query_terms_df,
                                                      trec_export)
-    from search_engine_spark.operators.wand import wand_topk
     from search_engine_spark.plans.build_driver import open_index
     from search_engine_spark.session import get_spark
 
@@ -109,6 +108,13 @@ def main() -> None:
         queries.append((f"q{i + 1:03d}", q))
     if not queries:
         ap.error("need --query or --topics")
+    if (args.route_serve or args.route_topical) and not args.route:
+        ap.error("--route-serve/--route-topical require --route M")
+    if args.route_serve and (args.mode != "bm25" or args.rescore):
+        # routed serving is plain BM25 over the selected shards; it
+        # cannot honour another ranking or a rescore window
+        ap.error("--route-serve serves plain BM25: it needs --mode bm25 "
+                 "and no --rescore")
 
     # with --rescore N the phase-1 retrieval must return the full
     # rescore window, not just the final page
@@ -117,9 +123,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     ix = open_index(spark, args.index)
     qterms = query_terms_df(spark, queries)
-    if args.mode in ("auto", "taat", "wand", "maxscore"):
-        blocked = ix.postings_blocked(qterms)  # term-bucket partition pruning
-    if args.mode in ("phrase", "near"):
+    if args.mode == "bm25":
+        from search_engine_spark.operators.wand import topk_auto
+        # term-bucket partition pruning; norms ride inline in the blocks
+        res = topk_auto(ix.postings_blocked(qterms), qterms, ix.n_docs,
+                        ix.avgdl, k=k_eff, salt_buckets=ix.salt_buckets)
+    elif args.mode in ("phrase", "near"):
         from search_engine_spark.conf import NEAR_WINDOW
         from search_engine_spark.operators.positional import (
             phrase_bm25_topk, phrase_query_terms_df, phrase_terms_df)
@@ -190,25 +199,11 @@ def main() -> None:
             print(f"{r.seed_id}\t{r.doc_id}\t{r.rank}\t{r.score}")
         spark.stop()
         return
-    elif args.mode == "taat-bounded":
+    else:  # taat-bounded
         from search_engine_spark.operators.query import taat_bounded_topk
         res = taat_bounded_topk(ix.term_counts, ix.doc_stats, ix.term_stats,
                                 qterms, ix.n_docs, ix.avgdl,
                                 acc_budget=args.acc_budget, k=k_eff)
-    elif args.mode == "auto" and ix.inline_dl:
-        from search_engine_spark.operators.wand import topk_auto
-        res = topk_auto(blocked, qterms, ix.n_docs, ix.avgdl, k=args.k,
-                        salt_buckets=ix.salt_buckets)
-    elif args.mode == "maxscore" and ix.inline_dl:
-        from search_engine_spark.operators.wand import wand_topk_maxscore
-        res = wand_topk_maxscore(blocked, qterms, ix.n_docs, ix.avgdl,
-                                 k=args.k, salt_buckets=ix.salt_buckets)
-    elif args.mode == "wand" and ix.inline_dl:
-        res = wand_topk(blocked, qterms, ix.n_docs, ix.avgdl, k=args.k,
-                        salt_buckets=ix.salt_buckets)
-    else:
-        res = bm25_topk_from_index(blocked, ix.doc_stats, qterms,
-                                   ix.n_docs, ix.avgdl, k=k_eff)
     if args.rescore:
         if ix.positional is None:
             ap.error("--rescore needs an index built with --positional")
@@ -217,8 +212,6 @@ def main() -> None:
                            ix.positional_pruned(qterms), qterms,
                            k=args.k, window=args.rescore)
         res = res.drop("base_score")
-    if (args.route_serve or args.route_topical) and not args.route:
-        ap.error("--route-serve/--route-topical require --route M")
     if args.route:
         from search_engine_spark.operators.shards import (cori_select,
                                                           routed_topk,

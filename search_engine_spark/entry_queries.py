@@ -450,25 +450,6 @@ def q_bm25_topk_delta(spark, sf_dir):
     return bm25_topk_union([idx_main, idx_delta], q, n_docs, avgdl, k=10)
 
 
-def q_wand_topk(spark, sf_dir):
-    """Block-max pruned BM25 (operators/wand.py) — rank/score-identical
-    to bm25_topk, gated by the same SQL oracle."""
-    from .operators.wand import wand_topk
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return wand_topk(idx_dl, q, n_docs, avgdl, k=10, salt_buckets=8)
-
-
-def q_wand_topk_hybrid(spark, sf_dir):
-    """All-JVM block-max path (champion θ floor + per-block bound
-    filter + codegen scoring) — same oracle as bm25_topk, proving the
-    pruning is rank/score-lossless."""
-    from .operators.wand import wand_topk_hybrid
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return wand_topk_hybrid(idx_dl, q, n_docs, avgdl, k=10, salt_buckets=8)
-
-
 def q_wand_topk_maxscore(spark, sf_dir):
     """MaxScore-strategy pruning (essential/non-essential term split +
     candidate probes) — same oracle as bm25_topk: lossless by gate."""
@@ -2548,8 +2529,6 @@ FROM tc"""
     # monolithic index — same oracle by construction
     sql["bm25_topk_delta"] = _bm25_sql(k=10)
     sql["bm25_topk_indexed"] = _bm25_sql(k=10)
-    sql["wand_topk"] = _bm25_sql(k=10)
-    sql["wand_topk_hybrid"] = _bm25_sql(k=10)
     sql["wand_topk_maxscore"] = _bm25_sql(k=10)
     sql["bm25_topk_varbyte"] = _bm25_sql(k=10)
     # Elias-Fano codec round-trip is value-invisible: same oracle
@@ -6624,8 +6603,6 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "postings": q_postings,
     "bm25_topk": q_bm25_topk,
     "bm25_topk_indexed": q_bm25_topk_indexed,
-    "wand_topk": q_wand_topk,
-    "wand_topk_hybrid": q_wand_topk_hybrid,
     "wand_topk_maxscore": q_wand_topk_maxscore,
     "bm25_topk_varbyte": q_bm25_topk_varbyte,
     "bm25_topk_trec": q_bm25_topk_trec,

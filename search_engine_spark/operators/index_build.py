@@ -214,9 +214,10 @@ def postings_blocked(tc: DataFrame, n_docs: int,
                 "first_doc_id", "last_doc_id", "block_max_tf",
                 *(["block_min_dl"] if ds is not None else []),
                 # the build's own doc-range id rides on every block row so
-                # query-time operators (wand_topk) group by the EXACT salt
-                # span the index was built with instead of re-deriving it
-                # from caller-supplied parameters (silent-mismatch hazard)
+                # query-time operators (wand.py's champion pass) group by
+                # the EXACT salt span the index was built with instead of
+                # re-deriving it from caller-supplied parameters
+                # (silent-mismatch hazard)
                 F.col("_salt").cast("int").alias("salt"))
     )
     return out

@@ -1,63 +1,43 @@
-"""Block-max WAND-style top-k pruning (SURVEY.md §2.5 R8).
+"""Block-max pruned BM25 top-k (SURVEY.md §2.5 R8), all JVM-side.
 
 The reference only *hints* at this ("need to pre-compute the upper/max
-threshold", /root/reference/src/invertedIndex.py:308-311 — the DAAT
-path :305-492 is unfinished). The north rule requires posting-list
-intersection with block-max pruning "expressed as broadcast
-term-dictionary lookup plus mapInPandas scoring". This module
-implements it as a **block-max score-at-a-time** scorer (the BMM
-family): provably the same top-k as exhaustive TAAT, with whole
-doc-ranges skipped using per-block score upper bounds.
+threshold", reference src/invertedIndex.py:308-311 — its DAAT path
+:305-492 is unfinished). Every block of the inline-dl index
+(postings_blocked(..., ds=doc_stats)) carries block_max_tf and
+block_min_dl, so a per-block score upper bound
 
-Distributed shape
------------------
-Doc space is partitioned into the same salt ranges the index build
-used (blocks never straddle a salt boundary — postings_blocked cuts
-blocks inside per-salt runs), so **every document's complete score for
-a query lives in exactly one (qid, range) group**:
+    ub(β) = qtf · idf · sat(block_max_tf, block_min_dl)
 
-    index blocks ⨝ broadcast(query terms)          [semi-join prune]
-      → champion-block pass (JVM)                  [θ floor from top-ub blocks]
-      → block-bound elimination (JVM)              [ub(β)+Σ_{t'≠t}max ub < θ ⇒ drop β]
-      → groupBy(qid, range).applyInPandas(scorer)  [numpy block-max walk, θ-seeded]
-      → union of local top-k → global window top-k [exact merge]
+is pure column math (sat is monotone ↑ in tf and ↓ in dl, so ub bounds
+every posting in the block). Serving is three layers:
 
-The JVM elimination is per BLOCK (a whole range dies when all its
-blocks die, so range-level elimination is subsumed): postings of a
-dropped block never pay the array projection or the Arrow transfer.
+1. champion θ floor (_champion_keys / _theta_floor): exact-score only
+   the highest-ub blocks per qid; the k-th best partial sum is a LOWER
+   bound of the true k-th best score, so at least k docs reach θ0;
+2. MaxScore (wand_topk_maxscore): per qid, the query terms whose summed
+   whole-term bounds stay below θ0 are non-essential — no doc touching
+   only them can reach the top-k — so their lists contribute only
+   through a candidate semi-join (at block granularity for long lists),
+   and only the essential lists are scored exhaustively;
+3. topk_auto: the cost-based pick the engine serves with — MaxScore for
+   shallow k on a large corpus, exhaustive scoring of the same blocked
+   index (query.bm25_topk_from_index) otherwise.
 
-Inside a group the scorer:
-1. computes per-block score upper bounds  ub = qtf·idf·sat(block_max_tf,
-   block_min_dl)  (sat is monotone ↑ in tf, ↓ in dl, so this bounds
-   every posting in the block);
-2. cuts the group's doc range into fixed segments; segment bound =
-   Σ_terms max{ub of blocks intersecting the segment};
-3. visits segments in descending bound, exact-scoring all postings in
-   the segment (vectorized numpy; docs are whole within a segment);
-4. stops as soon as the next segment's bound < θ − 1e-6, where θ is
-   the current k-th best raw score (the 1e-6 margin covers the 6-dp
-   score rounding of the rank contract, so rounded ties are never
-   pruned).
-
-Correctness: every pruned unit (block pre-transfer, segment in the
-scorer) carries a bound ≥ the true score of every doc it could serve,
-so any doc that can reach the top-k keeps all of its postings and is
-scored exactly — identical ranks and scores to the exhaustive path
-(property-tested in tests/test_wand.py; the block-subset argument is
-spelled out on _pruned_hits).
+Both branches are rank- and score-identical to exhaustive TAAT
+(property-tested in tests/test_wand.py, oracle-gated as
+wand_topk_maxscore, wand_topk_trec and bm25_topk_auto*). The 2e-6 prune
+margin exceeds the 1e-6 rounding quantum of the rank contract, so
+rounded ties are never pruned.
 
 At 10^12 turns: block metadata is ~1/POSTING_BLOCK of the index and
-rides in the same rows; stopword-hot terms have low idf → tiny ubs →
-their long tails prune first, which is exactly the skew the north rule
-calls out.
+rides in the same rows, champion selection holds state constant in
+corpus size, and stopword-hot terms have low idf → small bounds → they
+fall into the non-essential set first, which is exactly the skew the
+north rule calls out.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -65,164 +45,7 @@ from pyspark.sql.window import Window
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
 from .query import _topk
 
-_OUT_SCHEMA = "qid string, doc_id long, score double"
-_STATS_SCHEMA = ("qid string, range int, n_segments int, n_scored_segments int, "
-                 "n_postings long, n_postings_scored long")
 _PRUNE_MARGIN = 2e-6  # > 1e-6 rounding quantum of the rank contract
-
-
-def _score_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int,
-                 k1: float, b: float, n_segments: int,
-                 collect_stats: bool = False) -> pd.DataFrame:
-    """Exact local top-k for one (qid, doc-range) group with block-max
-    segment pruning. Returns ≤ k rows (qid, doc_id, raw score); with
-    ``collect_stats`` returns instead ONE row of pruning evidence
-    (segments visited vs total, postings exact-scored vs present)."""
-    qid = pdf["qid"].iloc[0]
-
-    # per-term flattening: postings arrive block-ordered by first_doc_id
-    terms = []
-    for term, g in pdf.groupby("term", sort=False):
-        g = g.sort_values("first_doc_id", kind="mergesort")
-        doc_ids = np.concatenate([np.asarray(x, dtype=np.int64) for x in g["doc_ids"]])
-        tfs = np.concatenate([np.asarray(x, dtype=np.float64) for x in g["tfs"]])
-        dls = np.concatenate([np.asarray(x, dtype=np.float64) for x in g["dls"]])
-        df = float(g["df"].iloc[0])
-        qtf = float(g["qtf"].iloc[0])
-        idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        w = qtf * idf
-        bmax_tf = g["block_max_tf"].to_numpy(dtype=np.float64)
-        bmin_dl = g["block_min_dl"].to_numpy(dtype=np.float64)
-        ub = w * (bmax_tf * (k1 + 1.0)
-                  / (bmax_tf + k1 * (1.0 - b + b * bmin_dl / avgdl)))
-        terms.append({
-            "doc_ids": doc_ids, "tfs": tfs, "dls": dls, "w": w,
-            "b_first": g["first_doc_id"].to_numpy(dtype=np.int64),
-            "b_last": g["last_doc_id"].to_numpy(dtype=np.int64),
-            "b_ub": ub,
-        })
-
-    lo = min(int(t["b_first"].min()) for t in terms)
-    hi = max(int(t["b_last"].max()) for t in terms)
-    width = max(1, (hi - lo + 1 + n_segments - 1) // n_segments)
-    n_seg = (hi - lo) // width + 1
-
-    # segment bound = Σ_terms max block-ub intersecting the segment
-    seg_ub = np.zeros(n_seg, dtype=np.float64)
-    for t in terms:
-        tm = np.zeros(n_seg, dtype=np.float64)
-        s0 = (t["b_first"] - lo) // width
-        s1 = (t["b_last"] - lo) // width
-        for i in range(len(s0)):          # per-block; blocks ≪ postings
-            a, z = int(s0[i]), int(s1[i])
-            u = t["b_ub"][i]
-            seg = tm[a:z + 1]
-            np.maximum(seg, u, out=seg)
-        seg_ub += tm
-
-    order = np.argsort(-seg_ub, kind="mergesort")
-
-    # running local top-k under the FINAL total order:
-    # (round(score, 6) DESC, doc_id ASC)
-    top_scores = np.empty(0, dtype=np.float64)
-    top_docs = np.empty(0, dtype=np.int64)
-    # θ seed: the champion-pass global lower bound (column `_theta0`,
-    # see wand_topk) — at least k docs are known to reach it, so any
-    # segment bounded below it prunes IMMEDIATELY, before this group
-    # has scored anything locally.
-    theta0 = -np.inf
-    if "_theta0" in pdf.columns:
-        v = pdf["_theta0"].iloc[0]
-        if v is not None and not pd.isna(v):
-            theta0 = float(v)
-    theta = theta0
-    n_scored_segments = 0
-    n_postings_scored = 0
-    for si in order:
-        if seg_ub[si] <= 0.0:
-            break
-        if seg_ub[si] < theta - _PRUNE_MARGIN:
-            break  # segments are in descending bound: all the rest prune
-        n_scored_segments += 1
-        d_lo = lo + si * width
-        d_hi = d_lo + width  # exclusive
-        seg_docs = []
-        seg_partials = []
-        for t in terms:
-            a = np.searchsorted(t["doc_ids"], d_lo, side="left")
-            z = np.searchsorted(t["doc_ids"], d_hi, side="left")
-            if a == z:
-                continue
-            n_postings_scored += int(z - a)
-            tf = t["tfs"][a:z]
-            dl = t["dls"][a:z]
-            sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            seg_docs.append(t["doc_ids"][a:z])
-            seg_partials.append(t["w"] * sat)
-        if not seg_docs:
-            continue
-        docs = np.concatenate(seg_docs)
-        partials = np.concatenate(seg_partials)
-        u_docs, inv = np.unique(docs, return_inverse=True)
-        scores = np.zeros(u_docs.size, dtype=np.float64)
-        np.add.at(scores, inv, partials)
-        # merge into running top-k
-        all_docs = np.concatenate([top_docs, u_docs])
-        all_scores = np.concatenate([top_scores, scores])
-        r = np.round(all_scores, 6)
-        sel = np.lexsort((all_docs, -r))[:k]
-        top_docs, top_scores = all_docs[sel], all_scores[sel]
-        if top_docs.size >= k:
-            # local k-th best can be below the global seed — θ never drops
-            theta = max(theta0, top_scores.min())
-
-    if collect_stats:
-        return pd.DataFrame({
-            "qid": [qid],
-            "range": [int(pdf["_range"].iloc[0])],
-            "n_segments": [int(n_seg)],
-            "n_scored_segments": [int(n_scored_segments)],
-            "n_postings": [int(sum(t["doc_ids"].size for t in terms))],
-            "n_postings_scored": [int(n_postings_scored)],
-        })
-    return pd.DataFrame({
-        "qid": np.repeat(qid, top_docs.size),
-        "doc_id": top_docs,
-        "score": top_scores,
-    })
-
-
-def wand_topk(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
-              avgdl: float, k: int = TOP_K_DEFAULT, k1: float = BM25_K1,
-              b: float = BM25_B, salt_buckets: int | None = None,
-              n_segments: int = 64,
-              champion_blocks: int | None = None) -> DataFrame:
-    """Top-k BM25 over the blocked index WITH inline dl
-    (postings_blocked(..., ds=doc_stats)) using block-max pruning.
-    Rank- and score-identical to bm25_topk (property-gated).
-
-    Pruning happens at two granularities, coarsest first: JVM-side
-    per-BLOCK bound elimination + θ seeding from a champion-block pass
-    (_pruned_hits — dropped blocks are never projected to arrays or
-    transferred to Python), then per-segment bound pruning inside the
-    Arrow scorer, with exact scoring only for surviving segments.
-
-    The doc-range grouping key comes from the index's own ``salt``
-    column when present (postings_blocked stamps each block with the
-    range it was built in), so correctness cannot depend on the caller
-    passing the same ``salt_buckets``/``n_docs`` the build used; the
-    parameter-derived span is only a fallback for legacy indexes
-    without the column."""
-    if champion_blocks is None:
-        champion_blocks = _default_champions(k)
-    hits = _pruned_hits(index_dl, qterms, n_docs, avgdl, k, k1, b,
-                        salt_buckets, champion_blocks)
-
-    def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_group(pdf, n_docs, avgdl, k, k1, b, n_segments)
-
-    local = hits.groupBy("qid", "_range").applyInPandas(scorer, schema=_OUT_SCHEMA)
-    return _topk(local, k)
 
 
 def _n_ranges(n_docs: int, salt_buckets: int | None) -> int:
@@ -350,142 +173,6 @@ def _theta_floor(index_dl: DataFrame, meta: DataFrame, n_docs: int,
             .where(F.col("_rk") == k).select("qid", F.col("_lb").alias("_theta0")))
 
 
-def _bound_tables(meta: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(tmax, rub): per-(qid, range, term) best block ub and per-(qid,
-    range) summed range bound — #queries × #ranges-touched ×
-    #query-terms NARROW rows.
-
-    Deliberately NOT hint-broadcast: with span-derived salting a hot
-    term touches every range, so at 10^12 docs tmax holds ~10^8 rows
-    per hot query term and a forced broadcast OOMs the executors
-    exactly where pruning matters most. The joins are left to AQE,
-    which sees the post-aggregation sizes: at bench/test scale (≤ a
-    few 10^4 rows) it broadcast-converts and the plan is identical to
-    a hinted one; at web scale it falls back to a shuffled join on
-    (qid, _range[, term]) — skew-splittable, and the block rows it
-    re-shuffles are the ones about to be grouped by (qid, _range)
-    anyway. Only θ (one scalar row per qid) keeps a broadcast hint."""
-    tmax = meta.groupBy("qid", "_range", "term").agg(F.max("_ub").alias("_tu"))
-    rub = tmax.groupBy("qid", "_range").agg(F.sum("_tu").alias("_rub"))
-    return tmax, rub
-
-
-def _pruned_hits(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
-                 avgdl: float, k: int, k1: float, b: float,
-                 salt_buckets: int | None,
-                 champion_blocks: int | None) -> DataFrame:
-    """BLOCK-level transfer pruning + θ seeding for the mapInPandas
-    scorer, all JVM-side, BEFORE any posting array crosses into Python.
-
-    1. champion θ floor (_theta_floor);
-    2. drop every block β whose sound score bound
-           bound(β) = ub(β) + Σ_{t'≠t} max_ub(t', range)
-       falls below _theta0 − margin (the same bound wand_topk_hybrid
-       filters on). A whole range dies when all its blocks die (every
-       block bound ≤ the range bound Σ_t max_ub), so this SUBSUMES the
-       former range-level elimination — and additionally drops cold
-       blocks inside surviving ranges. Postings of a dropped block
-       never pay the array projection or the Arrow transfer. For the
-       canonical hot∧rare query this strips both the ranges the rare
-       term doesn't touch and the hot term's low-tf blocks elsewhere;
-    3. seed the surviving groups' scorers with _theta0 so segment
-       pruning is active from the first segment.
-
-    Scoring a block SUBSET stays exact for everything that matters —
-    the identical argument as wand_topk_hybrid: a dropped block bounds
-    every one of its docs below θ0 − margin, and the champion pass
-    guarantees ≥ k docs reach θ0 globally, so neither a fully- nor a
-    partially-dropped doc can reach the global top-k; a doc that CAN
-    keeps all of its blocks (each bounds that doc's score ≥ θ ≥ θ0)
-    and is scored exactly. Segment bounds computed from the surviving
-    blocks still dominate every surviving doc's score for the same
-    reason (property-gated in tests/test_wand.py)."""
-    meta = _block_meta(index_dl, qterms, n_docs, avgdl, k1, b, salt_buckets)
-    arrays = (
-        index_dl.join(F.broadcast(qterms), "term", "inner")
-        .select(
-            "qid", "qtf", "term", "df",
-            "first_doc_id", "last_doc_id", "block_max_tf", "block_min_dl",
-            "postings",
-            _range_col(index_dl, n_docs, salt_buckets).alias("_range"),
-            _block_ub(n_docs, avgdl, k1, b).alias("_ub"),
-        )
-    )
-    if not champion_blocks:
-        hits = arrays.withColumn("_theta0", F.lit(None).cast("double"))
-    else:
-        theta = _theta_floor(index_dl, meta, n_docs, avgdl, k, k1, b,
-                             champion_blocks, salt_buckets)
-        tmax, rub = _bound_tables(meta)
-        hits = (arrays
-                .join(tmax, ["qid", "_range", "term"])
-                .join(rub, ["qid", "_range"])
-                .join(F.broadcast(theta), "qid", "left")
-                .where(F.col("_theta0").isNull()
-                       | (F.col("_ub") - F.col("_tu") + F.col("_rub")
-                          >= F.col("_theta0") - _PRUNE_MARGIN)))
-    return hits.select(
-        "qid", "qtf", "term", "df",
-        "first_doc_id", "last_doc_id", "block_max_tf", "block_min_dl", "_range",
-        F.transform("postings", lambda p: p["doc_id"]).alias("doc_ids"),
-        F.transform("postings", lambda p: p["tf"]).alias("tfs"),
-        F.transform("postings", lambda p: p["dl"]).alias("dls"),
-        "_theta0")
-
-
-def wand_topk_hybrid(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
-                     avgdl: float, k: int = TOP_K_DEFAULT, k1: float = BM25_K1,
-                     b: float = BM25_B, salt_buckets: int | None = None,
-                     champion_blocks: int | None = None) -> DataFrame:
-    """Block-max pruned BM25 executed ENTIRELY JVM-side: champion θ
-    floor → per-block sound bound filter → exact whole-stage-codegen
-    scoring of the surviving blocks. Rank/score-identical to bm25_topk.
-
-    Per-block bound (blocks never straddle a salt range):
-        bound(β of term t in range r) = ub(β) + Σ_{t'≠t} max_ub(t', r)
-    Every doc in β is inside r, and its t'-contribution is bounded by
-    the best t'-block ub of r, so bound(β) ≥ the true score of every
-    doc in β. Dropping β when bound < θ0 − margin therefore only drops
-    docs that cannot reach the top-k; and every true top-k doc's blocks
-    all survive (each such block's bound ≥ that doc's score ≥ θ ≥ θ0),
-    so surviving docs that matter are scored EXACTLY. Partially-scored
-    also-rans sit > 2 rounding quanta below θ0 and cannot flip a rank
-    even at the 6-dp tie boundary.
-
-    vs the mapInPandas scorer (wand_topk): no Arrow transfer at all and
-    exact scoring stays inside codegen, at the cost of coarser pruning
-    granularity (block × range instead of segment). At query time pick
-    this one when the corpus is JVM-resident; the pandas scorer remains
-    the north-rule mapInPandas surface and prunes finer."""
-    if champion_blocks is None:
-        champion_blocks = _default_champions(k)
-    meta = _block_meta(index_dl, qterms, n_docs, avgdl, k1, b, salt_buckets)
-    theta = _theta_floor(index_dl, meta, n_docs, avgdl, k, k1, b,
-                         champion_blocks, salt_buckets)
-    tmax, rub = _bound_tables(meta)
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5))
-    kept = (
-        index_dl.join(F.broadcast(qterms), "term", "inner")
-        .select("qid", "qtf", "term", "df", "first_doc_id", "postings",
-                _range_col(index_dl, n_docs, salt_buckets).alias("_range"),
-                _block_ub(n_docs, avgdl, k1, b).alias("_ub"))
-        .join(tmax, ["qid", "_range", "term"])
-        .join(rub, ["qid", "_range"])
-        .join(F.broadcast(theta), "qid", "left")
-        .where(F.col("_theta0").isNull()
-               | (F.col("_ub") - F.col("_tu") + F.col("_rub")
-                  >= F.col("_theta0") - _PRUNE_MARGIN))
-    )
-    flat = kept.select("qid", "qtf", "df", F.explode("postings").alias("p"))
-    tf = F.col("p.tf").cast("double")
-    sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("p.dl") / F.lit(avgdl)))
-    scored = (flat.select("qid", F.col("p.doc_id").alias("doc_id"),
-                          (F.col("qtf") * idf * sat).alias("partial"))
-              .groupBy("qid", "doc_id").agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
-
-
 def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
                        avgdl: float, k: int = TOP_K_DEFAULT, k1: float = BM25_K1,
                        b: float = BM25_B, salt_buckets: int | None = None,
@@ -521,9 +208,9 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
              .collect())
     theta: dict[str, float] = {}
     if champion_blocks and stats:
-        # champion selection + θ floor share the bounded-window path of
-        # the other strategies (_champion_keys / _theta_floor); θ rows
-        # collected are ≤ one per qid.
+        # champion selection + θ floor run the bounded-window path
+        # (_champion_keys / _theta_floor); θ rows collected are ≤ one
+        # per qid.
         theta = {r.qid: r._theta0 for r in
                  _theta_floor(index_dl, meta, n_docs, avgdl, k, k1, b,
                               champion_blocks, salt_buckets).collect()}
@@ -638,29 +325,6 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     scored = (hits.select("qid", "doc_id", (F.col("qtf") * idf * sat).alias("partial"))
               .groupBy("qid", "doc_id").agg(F.sum("partial").alias("score")))
     return _topk(scored, k)
-
-
-def wand_prune_stats(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
-                     avgdl: float, k: int = TOP_K_DEFAULT, k1: float = BM25_K1,
-                     b: float = BM25_B, salt_buckets: int | None = None,
-                     n_segments: int = 64,
-                     champion_blocks: int | None = None) -> DataFrame:
-    """Pruning evidence for the same pipeline wand_topk runs: one row
-    per SURVIVING (qid, range) with segments visited vs total and
-    postings exact-scored vs present; ranges the JVM pass dropped never
-    appear (bench.py derives the transfer savings by comparing against
-    the index's total query-term postings). On a degenerate
-    flat-vocabulary corpus every term is hot and nothing can prune."""
-    if champion_blocks is None:
-        champion_blocks = _default_champions(k)
-    hits = _pruned_hits(index_dl, qterms, n_docs, avgdl, k, k1, b,
-                        salt_buckets, champion_blocks)
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_group(pdf, n_docs, avgdl, k, k1, b, n_segments,
-                            collect_stats=True)
-
-    return hits.groupBy("qid", "_range").applyInPandas(stats, schema=_STATS_SCHEMA)
 
 
 def topk_auto(index_dl: DataFrame, qterms: DataFrame, n_docs: int,

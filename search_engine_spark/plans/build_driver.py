@@ -414,7 +414,8 @@ def _load_topical_bounds(out_dir: str,
     leftover from a different build in the same directory, or a
     resume that changed the corpus) is REJECTED rather than silently
     driving wrong id-range shard routing. Legacy files without the
-    fingerprint are also rejected — rebuild to re-mint them."""
+    fingerprint, and files whose bound count disagrees with their
+    shard count, are also rejected — rebuild to re-mint them."""
     path = os.path.join(out_dir, "topical_bounds.json")
     if not os.path.exists(path):
         return None
@@ -423,7 +424,8 @@ def _load_topical_bounds(out_dir: str,
     if int(tb.get("n_docs", -1)) != int(n_docs):
         return None
     bounds = [int(b) for b in tb["bounds"]]
-    if not bounds or bounds[0] != 0 or sorted(bounds) != bounds \
-            or bounds[-1] > n_docs:
+    n_shards = int(tb["n_shards"])
+    if len(bounds) != n_shards or not bounds or bounds[0] != 0 \
+            or sorted(bounds) != bounds or bounds[-1] > n_docs:
         return None
-    return int(tb["n_shards"]), bounds
+    return n_shards, bounds

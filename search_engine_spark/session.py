@@ -14,7 +14,8 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "search_engine_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     # Make the package importable in forked python workers regardless of
     # the driver's cwd (the local-mode analogue of --py-files: workers
     # re-import UDF modules by name when unpickling).

@@ -14,7 +14,7 @@ from search_engine_spark.functions.tokenize import term_counts
 from search_engine_spark.operators.index_build import (corpus_stats, doc_stats,
                                                        term_stats)
 from search_engine_spark.operators.query import bm25_topk, query_terms_df
-from search_engine_spark.operators.wand import wand_topk
+from search_engine_spark.operators.wand import wand_topk_maxscore
 from search_engine_spark.plans.build_driver import (STAGES,
                                                     build_index_checkpointed,
                                                     open_index)
@@ -102,8 +102,8 @@ def test_resume_with_changed_config_rebuilds_layout_stages(spark, tiny_corpus,
     ds = doc_stats(tc)
     cs = corpus_stats(tw, ds)
     direct = bm25_topk(tc, ds, term_stats(tc), q, cs["N"], cs["avgdl"], k=5)
-    served = wand_topk(ix.postings_blocked(), q, ix.n_docs, ix.avgdl, k=5,
-                       salt_buckets=ix.salt_buckets)
+    served = wand_topk_maxscore(ix.postings_blocked(), q, ix.n_docs,
+                                ix.avgdl, k=5, salt_buckets=ix.salt_buckets)
     assert key(served) == key(direct)
 
 
@@ -132,8 +132,8 @@ def test_reopened_index_serves_identical_topk(spark, built_dir, tiny_corpus):
     ix = open_index(spark, out)
     assert ix.compressed and ix.inline_dl
     q = query_terms_df(spark, QUERIES)
-    served = wand_topk(ix.postings_blocked(), q, ix.n_docs, ix.avgdl,
-                       k=5, salt_buckets=ix.salt_buckets)
+    served = wand_topk_maxscore(ix.postings_blocked(), q, ix.n_docs,
+                                ix.avgdl, k=5, salt_buckets=ix.salt_buckets)
     tc = term_counts(tw)
     ds = doc_stats(tc)
     cs = corpus_stats(tw, ds)

@@ -1,11 +1,13 @@
 """End-to-end CLI smoke: build.py over a seeded synthetic corpus, then
-query.py in the lm and prefix modes against the committed index. Each
-subprocess is a fresh JVM, so this also guards the spark-submit-style
-entrypoint wiring (E2 of SURVEY.md §3)."""
+query.py in each mode against the committed index. Each subprocess is a
+fresh JVM, so this also guards the spark-submit-style entrypoint wiring
+(E2 of SURVEY.md §3)."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -14,10 +16,14 @@ import pytest
 ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 
 
-def _run(args: list[str]) -> str:
+def _proc(args: list[str]) -> subprocess.CompletedProcess:
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    p = subprocess.run([sys.executable] + args, cwd=ROOT, env=env,
-                       capture_output=True, text=True, timeout=420)
+    return subprocess.run([sys.executable] + args, cwd=ROOT, env=env,
+                          capture_output=True, text=True, timeout=420)
+
+
+def _run(args: list[str]) -> str:
+    p = _proc(args)
     assert p.returncode == 0, p.stderr[-2000:]
     return p.stdout
 
@@ -26,6 +32,22 @@ def _run(args: list[str]) -> str:
 def built_index(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("cli") / "idx")
     _run(["build.py", "--synthetic", "30", "--out", out, "--cpus", "4"])
+    return out
+
+
+@pytest.fixture(scope="module")
+def positional_index(tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("cli_pos") / "idx")
+    _run(["build.py", "--synthetic", "12", "--out", out, "--cpus", "4",
+          "--positional"])
+    return out
+
+
+@pytest.fixture(scope="module")
+def topical_index(tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("cli_topical") / "idx")
+    _run(["build.py", "--synthetic", "30", "--out", out, "--cpus", "4",
+          "--topical-shards", "4"])
     return out
 
 
@@ -42,10 +64,11 @@ def test_cli_lm_mode(built_index):
 
 
 def test_cli_auto_mode(built_index):
-    """--mode auto must serve shallow k through the MaxScore branch and
-    produce a ranked result (rank-identity with taat is gated elsewhere)."""
+    """The default bm25 mode serves through topk_auto's cost-based pick
+    and produces a ranked result (rank identity of both branches with
+    exhaustive TAAT is gated elsewhere)."""
     got = _run(["query.py", "--index", built_index, "--cpus", "4",
-                "--mode", "auto", "--query", "a se", "--k", "5"])
+                "--mode", "bm25", "--query", "a se", "--k", "5"])
     rows = [ln.split("\t") for ln in got.strip().splitlines() if "\t" in ln]
     assert 1 <= len(rows) <= 5
     assert [int(r[2]) for r in rows] == list(range(1, len(rows) + 1))
@@ -85,7 +108,7 @@ def test_cli_mlt_mode(built_index):
 def test_cli_count_header(built_index):
     """--count prints COUNT qid n_any n_all before the ranked hits."""
     got = _run(["query.py", "--index", built_index, "--cpus", "4",
-                "--mode", "taat", "--count", "--query", "a se", "--k", "3"])
+                "--count", "--query", "a se", "--k", "3"])
     lines = [ln for ln in got.strip().splitlines() if "\t" in ln]
     counts = [ln.split("\t") for ln in lines if ln.startswith("COUNT")]
     hits = [ln.split("\t") for ln in lines if not ln.startswith("COUNT")]
@@ -99,8 +122,7 @@ def test_cli_explain_lines(built_index):
     """--explain prints per-term EXPLAIN rows whose partials are
     positive and cover every returned hit."""
     got = _run(["query.py", "--index", built_index, "--cpus", "4",
-                "--mode", "taat", "--explain", "--query", "a se",
-                "--k", "3"])
+                "--explain", "--query", "a se", "--k", "3"])
     lines = [ln for ln in got.strip().splitlines() if "\t" in ln]
     hits = {ln.split("\t")[1] for ln in lines if not ln.startswith("EXPLAIN")}
     ex = [ln.split("\t") for ln in lines if ln.startswith("EXPLAIN")]
@@ -120,10 +142,8 @@ def test_cli_significant_lines(built_index):
     assert all(int(r[3]) >= 1 and int(r[4]) >= int(r[3]) - 0 for r in sig)
 
 
-def test_cli_rescore_two_phase(tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("cli_pos") / "idx")
-    _run(["build.py", "--synthetic", "12", "--out", out, "--cpus", "4",
-          "--positional"])
+def test_cli_rescore_two_phase(positional_index):
+    out = positional_index
     plain = _run(["query.py", "--index", out, "--cpus", "4",
                   "--query", "a se", "--k", "5"])
     boosted = _run(["query.py", "--index", out, "--cpus", "4",
@@ -176,7 +196,7 @@ def test_cli_route_topical(built_index):
     """--route over topical shards: ROUTE lines with top-m=2 shard ids
     per query, shards derived from the k-means signature map."""
     got = _run(["query.py", "--index", built_index, "--cpus", "4",
-                "--mode", "taat", "--query", "a se", "--k", "3",
+                "--query", "a se", "--k", "3",
                 "--route", "2", "--route-shards", "4", "--route-topical"])
     routes = [ln for ln in got.splitlines() if ln.startswith("ROUTE\t")]
     assert len(routes) == 2  # top-2 shards for the one query
@@ -185,34 +205,28 @@ def test_cli_route_topical(built_index):
         assert 0 <= int(shard) < 4 and int(rank) in (1, 2)
 
 
-def test_cli_topical_build_layout(tmp_path_factory):
+def test_cli_topical_build_layout(topical_index):
     """build.py --topical-shards: the committed index carries the
     per-shard doc-id bounds, ids are contiguous per shard, and the
     index remains queryable."""
-    import json
-    out = str(tmp_path_factory.mktemp("cli_topical") / "idx")
-    _run(["build.py", "--synthetic", "30", "--out", out, "--cpus", "4",
-          "--topical-shards", "4"])
+    out = topical_index
     with open(os.path.join(out, "topical_bounds.json")) as f:
         tb = json.load(f)
     assert tb["n_shards"] == 4
     assert tb["bounds"][0] == 0 and sorted(tb["bounds"]) == tb["bounds"]
     got = _run(["query.py", "--index", out, "--cpus", "4",
-                "--mode", "taat", "--query", "a se", "--k", "3"])
+                "--query", "a se", "--k", "3"])
     assert any(ln.split("\t")[0] == "a se" or "\t" in ln
                for ln in got.splitlines())
 
 
-def test_cli_route_serve_on_topical_index(tmp_path_factory):
+def test_cli_route_serve_on_topical_index(topical_index):
     """Full selective-search serving from the CLI: the index built with
     --topical-shards carries id-range bounds, --route M --route-serve
     routes per query (zero-join shard derivation) and serves the
     route-then-score ranking."""
-    out = str(tmp_path_factory.mktemp("cli_serve") / "idx")
-    _run(["build.py", "--synthetic", "30", "--out", out, "--cpus", "4",
-          "--topical-shards", "4"])
-    got = _run(["query.py", "--index", out, "--cpus", "4",
-                "--mode", "taat", "--query", "a se", "--k", "3",
+    got = _run(["query.py", "--index", topical_index, "--cpus", "4",
+                "--query", "a se", "--k", "3",
                 "--route", "2", "--route-serve"])
     lines = got.splitlines()
     routes = [ln for ln in lines if ln.startswith("ROUTE\t")]
@@ -232,3 +246,55 @@ def test_cli_rebuild_invalidates_stale_topical_bounds(tmp_path_factory):
     _run(["build.py", "--synthetic", "20", "--out", out, "--cpus", "4",
           "--no-resume"])
     assert not os.path.exists(os.path.join(out, "topical_bounds.json"))
+
+
+def test_cli_rescore_window_is_top_n(spark, positional_index):
+    """--rescore N rescores the phase-1 top-N, not just the final page:
+    the CLI must return exactly what rescore_topk gives in-process over
+    the exhaustive top-20 (on this corpus a doc below rank 5 rises into
+    the page for "a jsem", so a top-5 window would differ)."""
+    from search_engine_spark.operators.query import (bm25_topk_from_index,
+                                                     query_terms_df)
+    from search_engine_spark.operators.rescore import rescore_topk
+    from search_engine_spark.plans.build_driver import open_index
+    out = _run(["query.py", "--index", positional_index, "--cpus", "4",
+                "--query", "a jsem", "--k", "5", "--rescore", "20"])
+    got = [ln.split("\t") for ln in out.strip().splitlines() if "\t" in ln]
+    ix = open_index(spark, positional_index)
+    q = query_terms_df(spark, [("q001", "a jsem")])
+    top20 = bm25_topk_from_index(ix.postings_blocked(), None, q,
+                                 ix.n_docs, ix.avgdl, k=20)
+    exp = rescore_topk(top20.select("qid", "doc_id", "score"),
+                       ix.positional_pruned(q), q, k=5, window=20)
+    assert [(r[0], int(r[1]), int(r[2]), round(float(r[3]), 6))
+            for r in got] == \
+        [(r.qid, r.doc_id, r.rank, round(r.score, 6))
+         for r in exp.orderBy("rank").collect()]
+
+
+def test_cli_route_serve_rejects_other_rankings(built_index):
+    """--route-serve serves plain routed BM25, so asking for another
+    mode or a rescore window with it is an error, not a silent swap."""
+    for extra in (["--mode", "lm"], ["--rescore", "20"]):
+        p = _proc(["query.py", "--index", built_index, "--cpus", "4",
+                   "--query", "a se", "--route", "2", "--route-serve"]
+                  + extra)
+        assert p.returncode == 2, p.stderr[-2000:]
+        assert "--route-serve serves plain BM25" in p.stderr
+
+
+def test_cli_topical_bounds_with_wrong_shard_count_rejected(
+        spark, topical_index, tmp_path):
+    """A bounds file whose bound count disagrees with its shard count is
+    rejected at open_index, like any other malformed bounds file."""
+    from search_engine_spark.plans.build_driver import open_index
+    out = str(tmp_path / "idx")
+    shutil.copytree(topical_index, out)
+    assert open_index(spark, out).topical is not None
+    path = os.path.join(out, "topical_bounds.json")
+    with open(path) as f:
+        tb = json.load(f)
+    tb["bounds"] = tb["bounds"][:-1]
+    with open(path, "w") as f:
+        json.dump(tb, f)
+    assert open_index(spark, out).topical is None

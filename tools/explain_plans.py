@@ -16,7 +16,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
 
-HEADLINE = ["bm25_topk", "bm25_topk_indexed", "wand_topk", "wand_topk_maxscore",
+HEADLINE = ["bm25_topk", "bm25_topk_indexed", "wand_topk_maxscore",
             "wand_topk_trec", "bm25_topk_conj", "term_stats", "doc_stats",
             "phrase_topk", "near_topk", "fuzzy_topk", "prf_topk", "snippets",
             "bm25_topk_not", "lm_topk", "prefix_topk", "collocations",
